@@ -1,4 +1,4 @@
-from .casts import exact_avg, exact_sum, zero_default_cast  # noqa: F401
+from .casts import exact_avg, exact_sum  # noqa: F401
 from .vectors import (  # noqa: F401
     cosine_pandas_udf,
     cosine_similarity,

@@ -1,11 +1,4 @@
-"""Expression helpers: reference cast semantics + oracle-exact aggregation.
-
-``zero_default_cast`` reproduces the reference parser's key semantic quirk
-(flowlog.go:59-90): every numeric field is parsed with ``strconv.Atoi`` and
-assigned *only on success*, so a non-numeric token (the ``-`` that VPC Flow
-Logs emits for NODATA/SKIPDATA rows) silently becomes Go's zero value 0.
-Spark's plain ``cast`` yields null there; ``coalesce(try_cast, 0)`` restores
-the reference behavior (SURVEY §1.2).
+"""Expression helpers: oracle-exact aggregation.
 
 ``exact_sum`` / ``exact_avg`` make double aggregation deterministic across
 engines: IEEE-754 summation is order-dependent, and Spark's partial/final
@@ -86,9 +79,3 @@ def exact_sum_sql(expr: str, scale: int = EXACT_SCALE) -> str:
 
 def exact_avg_sql(expr: str, scale: int = EXACT_SCALE) -> str:
     return f"({exact_sum_sql(expr, scale)}) / COUNT({expr})"
-
-
-def zero_default_cast(col: Column | str, dtype: str = "int") -> Column:
-    """Numeric cast with the reference's silent-zero default (flowlog.go:59-90)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.try_cast(dtype), F.lit(0).cast(dtype))

@@ -54,9 +54,12 @@ SRC_COLUMN = "src"
 
 def with_partition_columns(df: DataFrame) -> DataFrame:
     """Derive (dt, account) from event time + accountid (convert.go:13-27)."""
-    return df.withColumn(
-        "dt", F.date_format(F.col("start_time"), "yyyy-MM-dd")
-    ).withColumn("account", F.col("accountid"))
+    return df.withColumns(
+        {
+            "dt": F.expr("date_format(start_time, 'yyyy-MM-dd')"),
+            "account": F.expr("accountid"),
+        }
+    )
 
 
 def convert_flowlogs(
@@ -134,7 +137,7 @@ def convert_flowlogs(
     part_cols = list(PARTITION_COLUMNS)
     if src_partition:
         partitioned = partitioned.withColumn(
-            SRC_COLUMN, F.substring(F.sha2(F.input_file_name(), 256), 1, 12)
+            SRC_COLUMN, F.expr("substring(sha2(input_file_name(), 256), 1, 12)")
         )
         part_cols.append(SRC_COLUMN)
 
@@ -146,16 +149,20 @@ def convert_flowlogs(
     # needs (dt, account, src) tuples.
     key_obs = Observation()
     partitioned = partitioned.observe(
-        key_obs, F.collect_set(F.struct(*part_cols)).alias("pkeys")
+        key_obs, F.expr(f"collect_set(struct({', '.join(part_cols)})) AS pkeys")
     )
 
     mode = "overwrite" if overwrite_partitions else "append"
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
+        # Tried: repartition(64, *part_cols) and letting AQE coalesce the
+        # buckets. Slower: time to queryable read 2.08/1.94 s against
+        # 1.73/1.79 s for the plain key repartition (200k lines, local[4]).
         (
             partitioned.repartition(*part_cols)
             .write.mode(mode)
+            # per-write dynamic overwrite: replaces only the partitions in
+            # this batch and leaves the session conf untouched
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*part_cols)
             .parquet(dst_path, compression="snappy")
         )
@@ -173,8 +180,6 @@ def convert_flowlogs(
         if ERROR_CODE in msg or "malformed flow log line" in msg:
             raise FlowLogParseError(msg) from exc
         raise
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     keys = sorted(tuple(r[c] for c in part_cols) for r in key_obs.get["pkeys"])
     if strict and parse_obs is not None:
@@ -231,9 +236,10 @@ def register_flowlog_table(
 
     Creates the external partitioned table if needed, then registers
     partitions. With Hive layout the bulk path is ``MSCK REPAIR`` /
-    ``recoverPartitions``; the explicit per-key ``ALTER TABLE … ADD IF NOT
-    EXISTS PARTITION`` path is kept for parity with the reference's DDL
-    (main.go:177) and for selective registration.
+    ``recoverPartitions``; the explicit ``ALTER TABLE … ADD IF NOT EXISTS
+    PARTITION`` path is kept for parity with the reference's DDL
+    (main.go:177) and for selective registration — one statement for all
+    keys (:func:`add_partitions`), none when ``partitions`` is empty.
 
     ``partitions`` entries are ``(dt, account)`` for Hive-layout
     directories under ``location``, or ``(dt, account, path)`` to register
@@ -274,13 +280,31 @@ def register_flowlog_table(
         # already written, so recover everything via metadata listing
         spark.sql(f"MSCK REPAIR TABLE {table}")
         return
-    for entry in partitions:
-        # one DDL per distinct key, exactly the reference's statement shape
+    add_partitions(spark, table, partitions, key_len)
+
+
+def add_partitions(
+    spark: SparkSession,
+    table: str,
+    entries: list[tuple[str, ...]],
+    key_len: int = 2,
+) -> None:
+    """Register every entry in ONE ``ALTER TABLE … ADD IF NOT EXISTS``.
+
+    The reference's statement shape (main.go:177) with all its keys:
+    ``PARTITION (dt=…, account=…[, src=…]) [LOCATION '…']`` repeated, one
+    clause per distinct entry. The first ``key_len`` elements of an entry
+    are the key; a further element is its explicit ``LOCATION``. One
+    statement is one driver round trip and one catalog call; no entries,
+    no statement.
+    """
+    clauses = []
+    for entry in dict.fromkeys(tuple(e) for e in entries):
         spec = ", ".join(
             f"{col}='{val}'"
             for col, val in zip(("dt", "account", SRC_COLUMN), entry[:key_len])
         )
         loc = f" LOCATION '{entry[key_len]}'" if len(entry) > key_len else ""
-        spark.sql(
-            f"ALTER TABLE {table} ADD IF NOT EXISTS PARTITION ({spec}){loc}"
-        )
+        clauses.append(f"PARTITION ({spec}){loc}")
+    if clauses:
+        spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS {' '.join(clauses)}")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -41,6 +42,11 @@ def get_spark(app_name: str = "aws-vpcflowlogs-parquet-spark") -> SparkSession:
         # would turn dt= dirs into DATE and account= into LONG
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark's call-site capture wraps every Column-API call (F.col,
+        # [], try_cast, ...) in ~6 extra py4j round trips (active-session
+        # lookup, a conf read, origin set/clear); off, each call costs only
+        # its own. Error messages lose the Python call-site fragment only.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # 128 MB row groups — parity with the reference writer (parquet.go:34)
         .config("spark.hadoop.parquet.block.size", str(128 * 1024 * 1024))
@@ -87,6 +93,8 @@ def ensure_session_posture(spark: SparkSession) -> SparkSession:
         spark.conf.set(
             "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
         )
-    except Exception:
-        pass  # conf not recognized on this Spark version
+    except AnalysisException:
+        # a runtime set of an unknown key is accepted; a session that made
+        # either conf static or a core conf rejects it (CANNOT_MODIFY_*)
+        pass
     return spark

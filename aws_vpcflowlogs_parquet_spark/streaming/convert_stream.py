@@ -4,9 +4,11 @@
 Reference posture: one Lambda invocation per S3 notification, concurrency
 capped at 5 (template.yml:35-37,61-62), errors swallowed → **at-most-once**
 (main.go:77-83). Spark-first posture: a file-source streaming query over
-the drop directory with ``maxFilesPerTrigger`` as the concurrency analogue,
-checkpoint + idempotent dynamic-partition writes → **exactly-once per
-micro-batch** — a deliberate upgrade documented in SURVEY §7.
+the drop directory with ``maxFilesPerTrigger`` as the concurrency analogue
+and a checkpoint, so every file is converted — a deliberate upgrade
+documented in SURVEY §7. Each micro-batch *appends* its rows; a committed
+batch is never re-run. A batch that dies between its write and its commit
+is re-run on restart and appended again, so that window is at-least-once.
 
 The per-batch body reuses the exact batch operators (parse → dt/account →
 partitioned parquet; operators/convert.py), so batch and streaming cannot
@@ -20,7 +22,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.convert import with_partition_columns
+from ..operators.convert import add_partitions, with_partition_columns
 from ..schema import PARTITION_COLUMNS
 from ..sources.flowlog import parse_flowlog_lines
 
@@ -37,8 +39,9 @@ def start_flowlog_stream(
 
     ``max_files_per_trigger=5`` mirrors the reference's reserved
     concurrency of 5 Lambdas (template.yml:61-62). Partition registration
-    (the reference's per-key ALTER TABLE, main.go:175-196) happens inside
-    ``foreachBatch`` against the session catalog when ``table`` is given.
+    (the reference's ALTER TABLE, main.go:175-196) happens inside
+    ``foreachBatch`` against the session catalog when ``table`` is given:
+    one statement per micro-batch for all of its keys.
     """
     lines = (
         spark.readStream.format("text")
@@ -53,26 +56,17 @@ def start_flowlog_stream(
         # the second micro-batch scan the round-1 distinct().collect() paid
         # is gone (same single-pass contract as the batch converter)
         obs = Observation()
-        batch_df = batch_df.observe(
-            obs, F.collect_set(F.struct(*PARTITION_COLUMNS)).alias("pkeys")
+        pkeys = f"collect_set(struct({', '.join(PARTITION_COLUMNS)})) AS pkeys"
+        batch_df = batch_df.observe(obs, F.expr(pkeys))
+        (
+            batch_df.repartition(*PARTITION_COLUMNS)
+            .write.mode("append")
+            .partitionBy(*PARTITION_COLUMNS)
+            .parquet(dst_path, compression="snappy")
         )
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.repartition(*PARTITION_COLUMNS)
-                .write.mode("append")
-                .partitionBy(*PARTITION_COLUMNS)
-                .parquet(dst_path, compression="snappy")
-            )
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         if table is not None:
-            for row in sorted((r["dt"], r["account"]) for r in obs.get["pkeys"]):
-                sess.sql(
-                    f"ALTER TABLE {table} ADD IF NOT EXISTS "
-                    f"PARTITION (dt='{row[0]}', account='{row[1]}')"
-                )
+            keys = sorted((r["dt"], r["account"]) for r in obs.get["pkeys"])
+            add_partitions(sess, table, keys)
 
     return (
         parsed.writeStream.foreachBatch(write_batch)

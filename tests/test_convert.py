@@ -471,3 +471,206 @@ def test_run_event_end_to_end(spark, tmp_path):
         assert run_event(spark, {"Records": [{"nope": 1}]}, cfg) == []
     finally:
         spark.sql("DROP TABLE IF EXISTS flowlogs_h_test")
+
+
+def _count_alters(monkeypatch, spark):
+    """Wrap ``spark.sql`` and collect the ALTER TABLE statements it runs."""
+    alters = []
+    real_sql = spark.sql
+
+    def sql(query, *args, **kwargs):
+        if query.lstrip().upper().startswith("ALTER TABLE"):
+            alters.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", sql)
+    return alters
+
+
+def _multi_key_source(tmp_path, name="multi.log"):
+    # 2 days x 2 accounts = 4 (dt, account) keys
+    src = tmp_path / name
+    src.write_text(
+        "\n".join(
+            [HEADER]
+            + [_mk_line(a, d) for a in ("111111111111", "222222222222") for d in (DAY1, DAY2)]
+        )
+    )
+    return src
+
+
+def test_registration_issues_one_alter_for_all_keys(spark, tmp_path, monkeypatch):
+    out = tmp_path / "tbl"
+    keys = convert_flowlogs(spark, str(_multi_key_source(tmp_path)), str(out))
+    assert len(keys) == 4
+    alters = _count_alters(monkeypatch, spark)
+    register_flowlog_table(spark, "flowlogs_one_alter_test", str(out), partitions=keys)
+    try:
+        assert len(alters) == 1
+        assert alters[0].count("PARTITION (") == 4
+        assert spark.sql("SHOW PARTITIONS flowlogs_one_alter_test").count() == 4
+        n = spark.sql("SELECT count(*) AS n FROM flowlogs_one_alter_test").collect()[0]["n"]
+        assert n == 4
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_one_alter_test")
+
+
+def test_registration_without_keys_issues_no_alter(spark, tmp_path, monkeypatch):
+    alters = _count_alters(monkeypatch, spark)
+    register_flowlog_table(
+        spark, "flowlogs_no_keys_test", str(tmp_path / "tbl"), partitions=[]
+    )
+    try:
+        assert alters == []
+        assert spark.catalog.tableExists("flowlogs_no_keys_test")
+        assert spark.sql("SHOW PARTITIONS flowlogs_no_keys_test").count() == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_no_keys_test")
+
+
+def test_reregistering_overlapping_keys_is_idempotent(spark, tmp_path, monkeypatch):
+    out = tmp_path / "tbl"
+    keys = convert_flowlogs(spark, str(_multi_key_source(tmp_path)), str(out))
+    alters = _count_alters(monkeypatch, spark)
+    register_flowlog_table(spark, "flowlogs_overlap_test", str(out), partitions=keys[:3])
+    # overlaps the first set in two keys, adds the fourth, repeats one key
+    register_flowlog_table(
+        spark, "flowlogs_overlap_test", str(out), partitions=keys[1:] + keys[1:2]
+    )
+    try:
+        assert len(alters) == 2
+        assert spark.sql("SHOW PARTITIONS flowlogs_overlap_test").count() == 4
+        n = spark.sql("SELECT count(*) AS n FROM flowlogs_overlap_test").collect()[0]["n"]
+        assert n == 4
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_overlap_test")
+
+
+def test_src_partitioned_keys_register_in_one_statement(spark, tmp_path, monkeypatch):
+    f1 = tmp_path / "a.log"
+    f2 = tmp_path / "b.log"
+    f1.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1, 1111)]))
+    f2.write_text(
+        "\n".join(
+            [HEADER, _mk_line("111111111111", DAY1, 2222), _mk_line("222222222222", DAY2)]
+        )
+    )
+    out = tmp_path / "tbl"
+    keys = convert_flowlogs(spark, [str(f1), str(f2)], str(out), src_partition=True)
+    assert len(keys) == 3 and all(len(k) == 3 for k in keys)
+    alters = _count_alters(monkeypatch, spark)
+    register_flowlog_table(
+        spark, "flowlogs_src_one_test", str(out), partitions=keys, src_partitioned=True
+    )
+    try:
+        assert len(alters) == 1
+        assert spark.sql("SHOW PARTITIONS flowlogs_src_one_test").count() == 3
+        n = spark.sql(
+            "SELECT count(*) AS n FROM flowlogs_src_one_test WHERE dt='2018-11-04'"
+        ).collect()[0]["n"]
+        assert n == 2
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_src_one_test")
+
+
+def test_explicit_locations_register_in_one_statement(spark, tmp_path, monkeypatch):
+    staged = tmp_path / "staged"
+    keys = convert_flowlogs(spark, str(_multi_key_source(tmp_path)), str(staged))
+    entries = [
+        (dt, acct, str(staged / f"dt={dt}" / f"account={acct}")) for dt, acct in keys
+    ]
+    tbl_root = tmp_path / "tbl_root"
+    tbl_root.mkdir()
+    alters = _count_alters(monkeypatch, spark)
+    register_flowlog_table(spark, "flowlogs_locs_test", str(tbl_root), partitions=entries)
+    try:
+        assert len(alters) == 1
+        assert alters[0].count("LOCATION") == 4
+        got = spark.sql(
+            "SELECT account, count(*) AS n FROM flowlogs_locs_test "
+            "WHERE dt='2018-11-05' GROUP BY account ORDER BY account"
+        ).collect()
+        assert [(r["account"], r["n"]) for r in got] == [
+            ("111111111111", 1),
+            ("222222222222", 1),
+        ]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS flowlogs_locs_test")
+
+
+def test_convert_leaves_session_overwrite_mode_unchanged(spark, tmp_path):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        src = tmp_path / "in.log"
+        src.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1)]))
+        convert_flowlogs(spark, str(src), str(tmp_path / "out"))
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_second_source_leaves_other_partitions_intact(spark, tmp_path):
+    # dynamic overwrite is a per-write option, so it holds even when the
+    # session says static (which would truncate the whole table)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        f1 = tmp_path / "a.log"
+        f2 = tmp_path / "b.log"
+        f1.write_text("\n".join([HEADER, _mk_line("111111111111", DAY1, 1111)]))
+        f2.write_text("\n".join([HEADER, _mk_line("222222222222", DAY2, 2222)]))
+        out = tmp_path / "out"
+        convert_flowlogs(spark, str(f1), str(out))
+        convert_flowlogs(spark, str(f2), str(out))
+        got = sorted(
+            (r["dt"], r["account"], r["srcport"])
+            for r in spark.read.parquet(str(out)).collect()
+        )
+        assert got == [
+            ("2018-11-04", "111111111111", 1111),
+            ("2018-11-05", "222222222222", 2222),
+        ]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_parsed_schema_names_types_and_order(spark):
+    from aws_vpcflowlogs_parquet_spark.sources.flowlog import parse_flowlog_lines
+
+    lines = spark.createDataFrame([(_mk_line("111111111111", DAY1),)], "value string")
+    assert parse_flowlog_lines(lines).dtypes == [
+        ("version", "int"),
+        ("accountid", "string"),
+        ("interfaceid", "string"),
+        ("srcaddr", "string"),
+        ("dstaddr", "string"),
+        ("srcport", "int"),
+        ("dstport", "int"),
+        ("protocol", "int"),
+        ("packets", "int"),
+        ("bytes", "int"),
+        ("start_ts", "bigint"),
+        ("end_ts", "bigint"),
+        ("action", "string"),
+        ("logstatus", "string"),
+        ("start_time", "timestamp"),
+    ]
+
+
+def test_tokenize_keeps_columns_and_accepts_value_col(spark):
+    from aws_vpcflowlogs_parquet_spark.sources.flowlog import tokenize
+
+    df = spark.createDataFrame(
+        [(7, HEADER), (8, _mk_line("111111111111", DAY1)), (9, "2 too few")],
+        "id int, line string",
+    )
+    tok = tokenize(df, value_col="line")
+    assert tok.columns[:2] == ["id", "line"]
+    got = {
+        r["id"]: (r["_n_toks"], r["_is_header"], r["_is_valid"])
+        for r in tok.collect()
+    }
+    assert got == {7: (14, True, False), 8: (14, False, True), 9: (3, False, False)}

@@ -81,6 +81,58 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
         q2.stop()
 
 
+def test_stream_registers_each_batch_in_one_statement(spark, tmp_path, monkeypatch):
+    # with table= every micro-batch registers all of its (dt, account) keys
+    # in one ALTER TABLE; the stream appends and leaves the session's
+    # partitionOverwriteMode alone
+    from pyspark.sql import SparkSession
+
+    from aws_vpcflowlogs_parquet_spark.operators.convert import register_flowlog_table
+
+    src = tmp_path / "drop"
+    src.mkdir()
+    dst = tmp_path / "out"
+    register_flowlog_table(spark, "flowlogs_stream_test", str(dst), partitions=[])
+    alters = []
+    real_sql = SparkSession.sql
+
+    def sql(self, query, *args, **kwargs):
+        if query.lstrip().upper().startswith("ALTER TABLE"):
+            alters.append(query)
+        return real_sql(self, query, *args, **kwargs)
+
+    # foreachBatch hands each batch a fresh session wrapper: patch the class
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    (src / "a.log").write_text(
+        "\n".join(
+            [
+                HEADER,
+                _mk_line("111111111111", 1541375637, 1),
+                _mk_line("222222222222", 1541462037, 2),
+            ]
+        )
+    )
+    q = start_flowlog_stream(
+        spark, str(src), str(dst), str(tmp_path / "ckpt"), table="flowlogs_stream_test"
+    )
+    try:
+        q.processAllAvailable()
+        assert len(alters) == 1 and alters[0].count("PARTITION (") == 2
+        (src / "b.log").write_text(
+            "\n".join([HEADER, _mk_line("111111111111", 1541462037, 3)])
+        )
+        q.processAllAvailable()
+        assert len(alters) == 2 and alters[1].count("PARTITION (") == 1
+        assert spark.sql("SHOW PARTITIONS flowlogs_stream_test").count() == 3
+        n = spark.sql("SELECT count(*) AS n FROM flowlogs_stream_test").collect()[0]["n"]
+        assert n == 3
+        assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
+    finally:
+        q.stop()
+        spark.sql("DROP TABLE IF EXISTS flowlogs_stream_test")
+
+
 def _stream_events(spark, tmp_path):
     # stage the events table as a parquet streaming source
     src = tmp_path / "events_src"
